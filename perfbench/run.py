@@ -45,12 +45,12 @@ CANARY_NOISE = 1.5
 
 
 # The tail: the mean latency of the slowest TAIL_SHARE of the timed
-# operations, and never fewer than ten of them. A round of either
-# workload holds 27 operations, so this is the slowest 11: every
-# write and OPTIMIZE in dml-cdc, the operator-heavy reads in
-# olap-read. A single high percentile would sit on the boundary
-# between the read and write latency modes of dml-cdc and swing with
-# whichever op lands there.
+# operations, and never fewer than ten of them. An olap-read run
+# times 40 operations and a dml-cdc run 22, so this is the slowest 16
+# and 10: the operator-heavy reads in olap-read, every write, OPTIMIZE
+# and the CDC poll in dml-cdc. A single high percentile would sit on
+# the boundary between the read and write latency modes of dml-cdc
+# and swing with whichever op lands there.
 TAIL_SHARE = 0.4
 
 
@@ -69,23 +69,57 @@ def vm_hwm_kb(pid: int) -> int:
     return 0
 
 
-def tree_bytes(path: str) -> int:
+def jvm_memory(spark) -> dict:
+    """The driver JVM's heap at workload end: the old generation's peak
+    use over the run, then, after a forced full GC, the heap still in
+    use and the persisted RDD count. A heap leak (RDDs persisted and
+    never released, growing caches) raises the live heap, which the
+    fixed, pre-touched heap hides from VmHWM."""
+    import gc
+
+    jvm = spark.sparkContext._jvm
+    mf = jvm.java.lang.management.ManagementFactory
+    old_peak = 0
+    for pool in mf.getMemoryPoolMXBeans():
+        if pool.getType().toString() == "Heap memory" and "Old" in pool.getName():
+            old_peak = max(old_peak, pool.getPeakUsage().getUsed())
+    gc.collect()  # drop Python-side handles so the JVM objects are free
+    jvm.System.gc()
+    time.sleep(0.2)  # the cleaner unpersists RDDs asynchronously
+    jvm.System.gc()
+    return {
+        "old_gen_peak_mb": old_peak / 2**20,
+        "heap_live_mb": mf.getMemoryMXBean().getHeapMemoryUsage().getUsed() / 2**20,
+        "persisted_rdds": spark.sparkContext._jsc.getPersistentRDDs().size(),
+    }
+
+
+def tree_bytes(path: str, skip: str) -> int:
+    """Bytes of the regular files under ``path``, leaving out the tree
+    ``skip``. Spark's cleaner deletes checkpoint files asynchronously,
+    so a file that goes away during the walk is not counted."""
     total = 0
-    for dirpath, _dirs, files in os.walk(path):
+    for dirpath, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if os.path.join(dirpath, d) != skip]
         for name in files:
             p = os.path.join(dirpath, name)
-            if not os.path.islink(p):
-                total += os.path.getsize(p)
+            try:
+                if not os.path.islink(p):
+                    total += os.path.getsize(p)
+            except FileNotFoundError:
+                pass
     return total
 
 
 def measure(wl, seconds: float, tracer=None) -> dict:
-    """Run whole rounds until ``seconds`` of timed op wall passed.
+    """Run whole rounds until ``seconds`` of timed op wall passed and
+    at least the workload's ``min_rounds`` rounds ran.
 
     With a tracer, each read also runs once untraced right beside its
     traced run (alternating which goes first), so the two timings share
     the engine state; their wall ratio is the tracing overhead."""
     lat: list[tuple[str, float]] = []
+    labels: list[str] = []
     shadow: list[tuple[float, float]] = []  # (traced, untraced) read wall
     failures: list[str] = []
     elapsed, rounds = 0.0, 0
@@ -114,6 +148,7 @@ def measure(wl, seconds: float, tracer=None) -> dict:
                     if error is None and untraced is not None:
                         shadow.append((dt, untraced))
             lat.append((op.kind, dt))
+            labels.append(op.label[:40])
             elapsed += dt
             if error is None:
                 try:
@@ -123,15 +158,18 @@ def measure(wl, seconds: float, tracer=None) -> dict:
             if error is not None:
                 failures.append(error)
         rounds += 1
-        if elapsed >= seconds:
+        if elapsed >= seconds and rounds >= wl.min_rounds:
             break
     return {
-        "lat": lat, "shadow": shadow, "failures": failures,
+        "lat": lat, "labels": labels, "shadow": shadow, "failures": failures,
         "wall": elapsed, "rounds": rounds,
     }
 
 
 def _untraced_wall(op) -> float | None:
+    """Wall of one run of ``op`` outside any traced operation: the
+    installed wrappers call straight through and record no span,
+    deploy or routing."""
     t0 = time.perf_counter()
     try:
         op.run()
@@ -140,7 +178,9 @@ def _untraced_wall(op) -> float | None:
     return time.perf_counter() - t0
 
 
-def e2e_metrics(m: dict, setup_s: float, peak_rss_mb: float, disk_ratio: float):
+def e2e_metrics(
+    m: dict, setup_s: float, peak_rss_mb: float, heap_live_mb: float, disk_ratio: float
+):
     lats = [d for _k, d in m["lat"]]
     reads = [d for k, d in m["lat"] if k == "read"]
     metrics = {
@@ -150,6 +190,7 @@ def e2e_metrics(m: dict, setup_s: float, peak_rss_mb: float, disk_ratio: float):
         "op_tail_s": (tail_mean(lats)[0], "s"),
         "read_p50_s": (statistics.median(reads), "s"),
         "peak_rss_mb": (peak_rss_mb, "MB"),
+        "heap_live_mb": (heap_live_mb, "MB"),
         "disk_bytes_per_input_byte": (disk_ratio, "ratio"),
     }
     return {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()}
@@ -293,14 +334,15 @@ def run(args, work: str) -> dict:
         rss_mb = {"python": vm_hwm_kb(os.getpid()) / 1024, "jvm": vm_hwm_kb(jvm_pid) / 1024}
         # the warehouse: input, sandbox, layouts, cubes, snapshots and
         # CDC state; Spark's block/shuffle dirs are not part of it
-        disk = tree_bytes(work) - tree_bytes(os.path.join(work, "spark-local"))
+        disk = tree_bytes(work, skip=os.path.join(work, "spark-local"))
+        heap = jvm_memory(spark)
         if tracer is not None:
             metrics, layer_details = layer_metrics(
-                tracer, m, tracer.persisted_rdds(), cores
+                tracer, m, heap["persisted_rdds"], cores
             )
         else:
             metrics = e2e_metrics(
-                m, setup_s, sum(rss_mb.values()), disk / input_bytes
+                m, setup_s, sum(rss_mb.values()), heap["heap_live_mb"], disk / input_bytes
             )
         import bench
 
@@ -318,6 +360,7 @@ def run(args, work: str) -> dict:
         "timed_wall_s": m["wall"],
         "input_bytes": input_bytes,
         "peak_rss_mb": rss_mb,
+        "jvm_heap": heap,
         "per_kind": per_kind(m["lat"]),
         "canary_s": canary,
         "canary_par_s": canary_par,
@@ -330,7 +373,9 @@ def run(args, work: str) -> dict:
             samples=len(m["lat"]),
             tail_samples=tail_mean([d for _k, d in m["lat"]])[1],
             setup_s=setup_s,
-            latencies=[[k, round(d, 4)] for k, d in m["lat"]],
+            latencies=[
+                [k, label, round(d, 4)] for (k, d), label in zip(m["lat"], m["labels"])
+            ],
         )
     else:
         details.update(layer_details)

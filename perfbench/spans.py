@@ -7,7 +7,9 @@ module that defines them, on every engine module that bound the same
 function object by name at import (``from ..catalog import table``),
 on the query registry entries that hold them, and on the classes whose
 methods are layers (``Engine.sql``). :meth:`Tracer.uninstall` puts the
-originals back.
+originals back. Outside :meth:`Tracer.operation` every wrapper calls
+straight through and records nothing, so set-up, output checks and the
+untraced comparison runs leave no span and touch no counter.
 
 A span records layer, name, op id, start, end, parent and whether it
 raised. A layer's self time is its spans' time minus the part of each
@@ -200,6 +202,7 @@ class Tracer:
         self.parallel_legs = 0
         self.deploys = 0
         self.verbs: dict[str, int] = defaultdict(int)
+        self.active = False  # True only inside operation()
         self._local = threading.local()
         self._lock = threading.Lock()
         self._patches: list[tuple[object, str, object]] = []
@@ -241,6 +244,8 @@ class Tracer:
 
         @functools.wraps(fn)
         def wrapper(*args, **kwargs):
+            if not self.active:
+                return fn(*args, **kwargs)
             with self.span(layer, name) as sp:
                 if special is not None:
                     return special(fn, sp, args, kwargs)
@@ -292,7 +297,7 @@ class Tracer:
 
         @functools.wraps(fn)
         def wrapper(*args, **kwargs):
-            outer = not getattr(self._local, "in_deploy", False)
+            outer = self.active and not getattr(self._local, "in_deploy", False)
             if not outer:
                 return fn(*args, **kwargs)
             self._local.in_deploy = True
@@ -380,10 +385,12 @@ class Tracer:
         self.sc.setJobGroup(self.group, label[:80])
         j0 = ds.numTotalJobs()
         t0 = time.perf_counter()
+        self.active = True
         try:
             with self.span("op", label):
                 yield
         finally:
+            self.active = False
             wall = time.perf_counter() - t0
             self._pending = (op, self.group, j0, ds.numTotalJobs(), wall)
             self.op = self.group = None
@@ -472,12 +479,3 @@ class Tracer:
         for row in table.values():
             row["share"] = row["self_s"] / op_wall if op_wall else 0.0
         return table
-
-    def persisted_rdds(self) -> int:
-        """Persistent RDD count after a driver-side GC."""
-        import gc
-
-        gc.collect()
-        self.sc._jvm.System.gc()
-        time.sleep(0.5)
-        return self.sc._jsc.getPersistentRDDs().size()

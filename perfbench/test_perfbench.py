@@ -5,8 +5,9 @@ Run from the repository root::
 
     python3 -m pytest perfbench/test_perfbench.py -q
 
-The traced-layer test starts a Spark session and runs one round of each
-workload on small generated data (about three minutes on four cores).
+The traced-layer test starts a Spark session and runs each workload's
+set-up and measured rounds on small generated data (a few minutes on
+four cores).
 """
 
 from __future__ import annotations
@@ -32,7 +33,6 @@ OLAP_LAYERS = (
     "engine.sql", "engine.query", "sqlfront.parse", "sqlfront.route",
     "routing.route", "corpus_routing.route", "catalog.table",
     "operators.dedup", "operators.similarity", "operators.text",
-    "operators.graph",
 )
 DML_LAYERS = (
     "engine.sql", "ddl.verb", "maintenance.refresh", "maintenance.optimize",
@@ -50,20 +50,19 @@ def test_datagen_is_seeded():
 
 def _olap_text(seed: int) -> list:
     rng = random.Random(seed)
-    return [workloads.olap_round(rng, ["q01", "q05", "r43"]) for _ in range(3)]
+    return [workloads.olap_round(rng, ["q01", "q05", "q10"]) for _ in range(3)]
 
 
 def _dml_text(seed: int, data_dir: str) -> list:
     con = workloads.duck(data_dir, workloads.DML_MIRROR_TABLES, copy=True)
-    n_cust = con.execute("SELECT COUNT(*) FROM customer").fetchone()[0]
-    gen = workloads.DmlStatements(seed, con, n_cust)
+    gen = workloads.DmlStatements(seed, con)
     out = []
     for _ in range(2):
-        for kind in gen.round_order():
-            for verb, sql, mirror in gen.write(kind):
-                out.append((verb, sql))
-                for m in mirror:
-                    con.execute(m)
+        for verb in gen.round_order():
+            sql, mirror = gen.write(verb)
+            out.append(sql)
+            for m in mirror:
+                con.execute(m)
     con.close()
     return out
 
@@ -130,6 +129,10 @@ def test_traced_layers_and_job_accounting(spark, tmp_path, workload):
     wl.close()
     missing = [layer for layer in layers if table[layer]["count"] < 1]
     assert missing == []
+    # the untraced shadow runs record nothing: every span is an op's
+    assert all(sp.op is not None for sp in tracer.spans)
+    if workload == "olap-read":
+        assert tracer.deploys == 0  # set-up deployed every layout
     # every job the op started carries the op's job group, so the
     # profiler's per-op job count is statusTracker's count for the group
     assert tracer.op_spark
