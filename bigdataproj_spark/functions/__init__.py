@@ -1,4 +1,4 @@
-"""Deterministic expression helpers (SURVEY.md §2.4) + vector math.
+"""Deterministic expression helpers (SURVEY.md §2.4).
 
 The core trick for cross-engine bit-exact aggregates: double summation
 order differs between Spark and DuckDB, so SUM/AVG over DOUBLE columns
@@ -45,22 +45,6 @@ def dsum(c: Column | str, precision: int = 12, scale: int = 2) -> Column:
     return F.sum(dec(c, precision, scale)).cast("double")
 
 
-def dsum_expr(c: Column) -> Column:
-    """Order-independent SUM over an already-decimal expression → DOUBLE."""
-    return F.sum(c).cast("double")
-
-
-def davg(c: Column | str, precision: int = 12, scale: int = 2) -> Column:
-    """Deterministic AVG: exact decimal sum cast to double, then IEEE
-    double division by the count — bit-identical across engines.
-
-    Oracle twin:
-    ``CAST(SUM(CAST(x AS DECIMAL(p,s))) AS DOUBLE) / COUNT(x)``.
-    """
-    cc = F.col(c) if isinstance(c, str) else c
-    return dsum(cc, precision, scale) / F.count(cc)
-
-
 def cents(c: Column | str, scale: int = 100) -> Column:
     """Fixed-point int64 view of a 2-decimal money double: round(x*100).
 
@@ -101,20 +85,6 @@ def isum_expr(c: Column, denom: int) -> Column:
     return F.sum(c).cast("double") / denom
 
 
-def imin_expr(c: Column, denom: int) -> Column:
-    """MIN of a pre-scaled int64 fixed-point expression → DOUBLE / denom.
-
-    Exact and monoid-mergeable like isum_expr: scaling to fixed point
-    is monotone, so it commutes with MIN/MAX — min over stored partial
-    mins equals min over the raw rows."""
-    return F.min(c).cast("double") / denom
-
-
-def imax_expr(c: Column, denom: int) -> Column:
-    """MAX twin of :func:`imin_expr`."""
-    return F.max(c).cast("double") / denom
-
-
 def iavg(c: Column | str, scale: int = 100) -> Column:
     """Deterministic AVG on the int64 fixed-point path (see isum)."""
     cc = F.col(c) if isinstance(c, str) else c
@@ -128,56 +98,6 @@ def fmt_ts(c: Column | str) -> Column:
     """
     c = F.col(c) if isinstance(c, str) else c
     return F.date_format(c, "yyyy-MM-dd'T'HH:mm:ss")
-
-
-def round6(c: Column | str) -> Column:
-    c = F.col(c) if isinstance(c, str) else c
-    return F.round(c, 6)
-
-
-# ---------------------------------------------------------------------------
-# Vector math over ARRAY<FLOAT>/ARRAY<DOUBLE> columns — native higher-order
-# functions, fully JVM-side (no UDF). Used by similarity/embedding ops.
-# ---------------------------------------------------------------------------
-
-
-def vec_dot(a: Column | str, b: Column | str) -> Column:
-    """Dot product of two array columns via zip_with + aggregate."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def vec_norm(a: Column | str) -> Column:
-    """L2 norm of an array column."""
-    a = F.col(a) if isinstance(a, str) else a
-    return F.sqrt(
-        F.aggregate(
-            a,
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-    )
-
-
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity of two array columns (JVM-side, no UDF)."""
-    return vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
-
-
-def vec_scale(a: Column | str, s: Column) -> Column:
-    a = F.col(a) if isinstance(a, str) else a
-    return F.transform(a, lambda x: x.cast("double") * s)
-
-
-def vec_add(a: Column | str, b: Column | str) -> Column:
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.zip_with(a, b, lambda x, y: x.cast("double") + y.cast("double"))
 
 
 def round_fp(c: Column | str, digits: int) -> Column:

@@ -127,8 +127,10 @@ def r43_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a broadcast-exchange build per round for one number. Python and
     # the JVM divide the same IEEE binary64 operands identically, so
     # folding the division into a literal is bit-identical to the
-    # oracle's (SELECT n_nodes FROM n) scalar subquery.
-    n_nodes = deg.count()
+    # oracle's (SELECT n_nodes FROM n) scalar subquery. An empty graph
+    # has no node to rank: the guard only keeps the literals finite,
+    # and every frame below stays empty.
+    n_nodes = deg.count() or 1
 
     ranks = iter_checkpoint(
         deg.select(

@@ -58,8 +58,8 @@ query-time lookup.
 At 100 TB: both cubes are scale-invariant (|langs|x|sources|,
 |types|x|hours|); the raw fallbacks are one-shuffle scan+aggregate
 plans with fused pre-projections (the q01 shape). Differentially
-fuzzed against DuckDB in tests/test_fuzz_routing.py alongside the
-lineitem families.
+fuzzed against DuckDB in tests/test_corpus_routing.py (the
+``test_random_*`` cases).
 """
 
 from __future__ import annotations
@@ -74,7 +74,15 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions import cents
-from .routing import AggCall, BoolPred, Pred
+from .routing import (
+    AggCall,
+    BoolPred,
+    Pred,
+    _StoredMeasure,
+    aggregate,
+    aggs_fold,
+    row_measures,
+)
 
 # ---------------------------------------------------------------------------
 # The spec + semantic model.
@@ -348,89 +356,6 @@ def validate(q: TableAggQuery) -> CorpusTable:
 
 
 # ---------------------------------------------------------------------------
-# Aggregate output expressions (shared by cube and raw paths).
-# ---------------------------------------------------------------------------
-
-
-def _agg_exprs(
-    q: TableAggQuery,
-    t: CorpusTable,
-    src_int: dict[str, str],
-    src_cnt: dict[str, str],
-    cnt_star: str | None,
-    src_min: dict[str, str] | None = None,
-    src_max: dict[str, str] | None = None,
-    src_sketch: dict[str, str] | None = None,
-) -> list[Column]:
-    """routing._final_agg_exprs generalized to the corpus measure
-    model: divisor-1 measures keep exact BIGINT sums and min/max;
-    money measures divide back to double. ``cnt_star`` names a stored
-    partial-count column on the cube path (counts re-derive as
-    coalesced SUMs there — SQL COUNT over empty input is 0, SUM of no
-    partials is NULL). ``src_sketch`` maps approx_distinct targets to
-    stored HLL sketch columns on the cube path (union-merged, then
-    estimated); the raw path sketches the rows directly — the two
-    agree exactly because HLL union is register-max, so the merged
-    register state equals the single-pass state."""
-    src_min = src_min if src_min is not None else src_int
-    src_max = src_max if src_max is not None else src_int
-    exprs: list[Column] = []
-    for a in q.aggs:
-        if a.fn == "count_distinct":
-            exprs.append(F.countDistinct(F.col(a.measure)).alias(a.alias))
-            continue
-        if a.fn == "approx_distinct":
-            if src_sketch and a.measure in src_sketch:
-                sk = F.hll_union_agg(src_sketch[a.measure])
-            else:
-                sk = F.hll_sketch_agg(F.col(a.measure))
-            exprs.append(F.hll_sketch_estimate(sk).alias(a.alias))
-            continue
-        if a.fn == "count_star":
-            exprs.append(
-                (
-                    F.coalesce(F.sum(cnt_star), F.lit(0).cast("long"))
-                    if cnt_star
-                    else F.count(F.lit(1))
-                ).alias(a.alias)
-            )
-            continue
-        m = t.measures[a.measure]
-        if a.fn == "sum":
-            s = F.sum(F.col(src_int[a.measure]))
-            if m.divisor != 1:
-                s = s.cast("double") / m.divisor
-            exprs.append(s.alias(a.alias))
-        elif a.fn == "min":
-            v = F.min(F.col(src_min[a.measure]))
-            if m.divisor != 1:
-                v = v.cast("double") / m.divisor
-            exprs.append(v.alias(a.alias))
-        elif a.fn == "max":
-            v = F.max(F.col(src_max[a.measure]))
-            if m.divisor != 1:
-                v = v.cast("double") / m.divisor
-            exprs.append(v.alias(a.alias))
-        elif a.fn == "count":
-            exprs.append(
-                (
-                    F.coalesce(F.sum(src_cnt[a.measure]), F.lit(0).cast("long"))
-                    if cnt_star
-                    else F.count(src_cnt[a.measure])
-                ).alias(a.alias)
-            )
-        elif a.fn == "avg":
-            s = F.sum(F.col(src_int[a.measure])).cast("double")
-            if m.divisor != 1:
-                s = s / m.divisor
-            c = F.sum(src_cnt[a.measure]) if cnt_star else F.count(src_cnt[a.measure])
-            exprs.append((s / c).alias(a.alias))
-        else:
-            raise ValueError(f"unsupported aggregate fn {a.fn!r}")
-    return exprs
-
-
-# ---------------------------------------------------------------------------
 # Cube descriptors + subsumption.
 # ---------------------------------------------------------------------------
 
@@ -472,14 +397,6 @@ def _rewrite_ts(f, ts_src: str, time_col: str):
 
 
 @dataclass(frozen=True)
-class _StoredM:
-    int_col: str
-    cnt_col: str | None
-    min_col: str | None = None
-    max_col: str | None = None
-
-
-@dataclass(frozen=True)
 class CorpusProjection:
     """One deployed corpus cube: the plain group keys it stores, an
     optional hour-grain time key ``(stored_col, ts_source_col)``, its
@@ -488,7 +405,7 @@ class CorpusProjection:
     name: str
     table: str
     attrs: frozenset[str]
-    measures: dict[str, _StoredM]
+    measures: dict[str, _StoredMeasure]
     count_star_col: str
     open: Callable[[SparkSession, str], DataFrame]
     # (stored hour-grain col, ts source col); the stored grain is hour
@@ -541,27 +458,7 @@ class CorpusProjection:
         for f in q.filters:
             if not _filter_folds(f, foldable, ts_src):
                 return False
-        for a in q.aggs:
-            if a.fn == "count_star":
-                continue
-            if a.fn == "count_distinct":
-                if (a.measure or "") not in foldable:
-                    return False
-                continue
-            if a.fn == "approx_distinct":
-                if (a.measure or "") not in (self.sketches or {}):
-                    return False
-                continue
-            sm = self.measures.get(a.measure or "")
-            if sm is None:
-                return False
-            if a.fn in ("count", "avg") and sm.cnt_col is None:
-                return False
-            if a.fn == "min" and sm.min_col is None:
-                return False
-            if a.fn == "max" and sm.max_col is None:
-                return False
-        return True
+        return aggs_fold(q.aggs, self.measures, foldable, self.sketches)
 
     def build(self, spark: SparkSession, sf_dir: str, q: TableAggQuery) -> DataFrame:
         t = CORPUS_TABLES[q.table]
@@ -597,19 +494,9 @@ class CorpusProjection:
             # date_trunc(u, hour) == date_trunc(u, ts) for u >= hour;
             # the hour grain itself is the stored key verbatim
             df = df.withColumn(alias, F.date_trunc(unit, F.col(src)))
-        if not q.aggs:
-            return df.select(*q.group_by).distinct().orderBy(*q.group_by)
-        int_cols = {m: sm.int_col for m, sm in self.measures.items()}
-        cnt_cols = {m: sm.cnt_col for m, sm in self.measures.items() if sm.cnt_col}
-        min_cols = {m: sm.min_col for m, sm in self.measures.items() if sm.min_col}
-        max_cols = {m: sm.max_col for m, sm in self.measures.items() if sm.max_col}
-        out = df.groupBy(*q.group_by).agg(
-            *_agg_exprs(
-                q, t, int_cols, cnt_cols, self.count_star_col,
-                min_cols, max_cols, self.sketches,
-            )
+        return aggregate(
+            df, q, t.measures, self.measures, self.count_star_col, self.sketches
         )
-        return out.orderBy(*q.group_by) if q.group_by else out
 
 
 def _open_docs_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -632,9 +519,15 @@ CORPUS_PROJECTIONS: tuple[CorpusProjection, ...] = (
         table="documents",
         attrs=frozenset({"lang", "source"}),
         measures={
-            "chars": _StoredM("chars_i", "cnt_chars", "min_chars_i", "max_chars_i"),
-            "tokens": _StoredM("tokens_i", "cnt_text", "min_tokens_i", "max_tokens_i"),
-            "stopwords": _StoredM("stop_i", "cnt_text", "min_stop_i", "max_stop_i"),
+            "chars": _StoredMeasure(
+                "chars_i", "cnt_chars", "min_chars_i", "max_chars_i"
+            ),
+            "tokens": _StoredMeasure(
+                "tokens_i", "cnt_text", "min_tokens_i", "max_tokens_i"
+            ),
+            "stopwords": _StoredMeasure(
+                "stop_i", "cnt_text", "min_stop_i", "max_stop_i"
+            ),
         },
         count_star_col="cnt",
         open=_open_docs_cube,
@@ -644,7 +537,9 @@ CORPUS_PROJECTIONS: tuple[CorpusProjection, ...] = (
         table="events",
         attrs=frozenset({"event_type"}),
         measures={
-            "value": _StoredM("value_i", "cnt_value", "min_value_i", "max_value_i"),
+            "value": _StoredMeasure(
+                "value_i", "cnt_value", "min_value_i", "max_value_i"
+            ),
         },
         count_star_col="cnt",
         open=_open_events_cube,
@@ -705,10 +600,9 @@ def _raw_plan(spark: SparkSession, sf_dir: str, q: TableAggQuery) -> DataFrame:
     pre = df.select(
         *keep, *[t.measures[m].raw_int().alias(int_cols[m]) for m in needed]
     )
-    out = pre.groupBy(*q.group_by).agg(
-        *_agg_exprs(q, t, int_cols, cnt_cols, None)
+    return aggregate(
+        pre, q, t.measures, row_measures(int_cols, t.measures), None, None
     )
-    return out.orderBy(*q.group_by) if q.group_by else out
 
 
 # ---------------------------------------------------------------------------

@@ -48,6 +48,12 @@ those numbers the default path for any query in its shape family.
 Plan-asserted in tests/test_routing.py: the routed q01/q26 shapes
 read ONLY projection storage (no raw lineitem scan in the physical
 plan); the fallback shape reads the raw table.
+
+The part of routing that does not depend on the fact family lives
+here and serves plans/corpus_routing.py too: the stored-partial
+descriptor (:class:`_StoredMeasure`), the aggregate-fold check
+(:func:`aggs_fold`) and the aggregate-output builder
+(:func:`aggregate`). Chain, arm and spine rules stay lineitem-only.
 """
 
 from __future__ import annotations
@@ -59,7 +65,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..functions import cents, imax_expr, imin_expr, isum_expr
+from ..functions import cents
 from ..registry import query
 from ..sources.bucketed import (
     _N_BUCKETS,
@@ -429,10 +435,133 @@ SUPP_ATTRS = frozenset({"s_name", "s_acctbal"})
 
 @dataclass(frozen=True)
 class _StoredMeasure:
-    int_col: str  # stored int64 partial-sum column
-    cnt_col: str | None  # stored non-null count column (COUNT/AVG support)
-    min_col: str | None = None  # stored int64 partial-min (MIN support)
-    max_col: str | None = None  # stored int64 partial-max (MAX support)
+    """Where one measure's partial state lives in an aggregation's
+    input. A stored projection names its partial columns; a row-level
+    plan points every field at the per-row int column (see
+    :func:`row_measures`), because each row is its own partial."""
+
+    int_col: str  # int64 partial-sum column
+    cnt_col: str | None  # non-null count column (COUNT/AVG support)
+    min_col: str | None = None  # int64 partial-min (MIN support)
+    max_col: str | None = None  # int64 partial-max (MAX support)
+
+
+def row_measures(int_cols: dict[str, str], model: dict) -> dict[str, _StoredMeasure]:
+    """Row-level input: sums, MIN and MAX read each measure's per-row
+    int column, counts its source column (``model`` is the family's
+    measure table)."""
+    return {
+        m: _StoredMeasure(c, model[m].source_col, c, c) for m, c in int_cols.items()
+    }
+
+
+def aggs_fold(
+    aggs: tuple[AggCall, ...],
+    measures: dict[str, _StoredMeasure],
+    attrs: frozenset[str],
+    sketches: dict[str, str] | None,
+) -> bool:
+    """Whether every aggregate re-derives from stored partials: COUNT(*)
+    from the stored row counts; COUNT(DISTINCT) iff its target is a
+    stored group key in ``attrs`` (the distinct value set within any
+    output group over stored rows equals the set over raw rows);
+    approx_distinct iff a mergeable sketch partial is stored for the
+    target (union is register-max, so re-aggregating sketches equals
+    the single-pass sketch exactly); a measure aggregate iff the
+    partial it needs is stored."""
+    for a in aggs:
+        if a.fn == "count_star":
+            continue
+        if a.fn == "count_distinct":
+            if (a.measure or "") not in attrs:
+                return False
+            continue
+        if a.fn == "approx_distinct":
+            if (a.measure or "") not in (sketches or {}):
+                return False
+            continue
+        sm = measures.get(a.measure or "")
+        if (
+            sm is None
+            or (a.fn in ("count", "avg") and sm.cnt_col is None)
+            or (a.fn == "min" and sm.min_col is None)
+            or (a.fn == "max" and sm.max_col is None)
+        ):
+            return False
+    return True
+
+
+def _unscale(v: Column, divisor: int) -> Column:
+    """An int64 fixed-point aggregate back to the measure's value: an
+    integer measure (divisor 1) stays an exact BIGINT, a money measure
+    divides back to double."""
+    return v if divisor == 1 else v.cast("double") / divisor
+
+
+def aggregate(
+    df: DataFrame,
+    q,
+    model: dict,
+    cols: dict[str, _StoredMeasure],
+    cnt_star: str | None,
+    sketches: dict[str, str] | None,
+) -> DataFrame:
+    """The query's output over ``df``: the distinct grouping-key
+    combinations when ``q.aggs`` is empty, else its aggregates grouped
+    by ``q.group_by``, ordered by the grouping key (a global aggregate
+    is one row with nothing to order).
+
+    ``model`` is the family's measure table (for divisors); ``cols``
+    says where each measure's partial state lives in ``df``.
+    ``cnt_star`` names a partial COUNT(*) column when the rows of
+    ``df`` are themselves partials: counts then re-derive as SUMs of
+    partial counts, coalesced to 0 because SQL COUNT over an empty
+    input is 0 while SUM of no partials is NULL (a filtered global
+    aggregate hits this). ``sketches`` maps approx_distinct targets to
+    stored HLL sketch columns, which union-merge; without it the rows
+    are sketched directly. The two agree exactly: union is
+    register-max, so the merged register state equals the single-pass
+    state."""
+    if not q.aggs:
+        return df.select(*q.group_by).distinct().orderBy(*q.group_by)
+
+    def count_of(c):
+        if cnt_star:
+            return F.coalesce(F.sum(c), F.lit(0).cast("long"))
+        return F.count(c)
+
+    exprs = []
+    for a in q.aggs:
+        if a.fn == "count_distinct":
+            e = F.countDistinct(F.col(a.measure))
+        elif a.fn == "approx_distinct":
+            sk = (
+                F.hll_union_agg(sketches[a.measure])
+                if sketches
+                else F.hll_sketch_agg(F.col(a.measure))
+            )
+            e = F.hll_sketch_estimate(sk)
+        elif a.fn == "count_star":
+            e = count_of(cnt_star or F.lit(1))
+        elif a.fn not in ("sum", "min", "max", "count", "avg"):
+            raise ValueError(f"unsupported aggregate fn {a.fn!r}")
+        else:
+            d, c = model[a.measure].divisor, cols[a.measure]
+            if a.fn == "sum":
+                e = _unscale(F.sum(F.col(c.int_col)), d)
+            elif a.fn == "min":
+                e = _unscale(F.min(F.col(c.min_col)), d)
+            elif a.fn == "max":
+                e = _unscale(F.max(F.col(c.max_col)), d)
+            elif a.fn == "count":
+                e = count_of(c.cnt_col)
+            else:
+                s = F.sum(F.col(c.int_col)).cast("double")
+                denom = F.sum(c.cnt_col) if cnt_star else F.count(c.cnt_col)
+                e = (s if d == 1 else s / d) / denom
+        exprs.append(e.alias(a.alias))
+    out = df.groupBy(*q.group_by).agg(*exprs)
+    return out.orderBy(*q.group_by) if q.group_by else out
 
 
 @dataclass(frozen=True)
@@ -494,33 +623,7 @@ class Projection:
         # then constant within each stored group).
         if not filter_cols <= self.attrs:
             return False
-        for a in q.aggs:
-            if a.fn == "count_star":
-                continue
-            if a.fn == "count_distinct":
-                # folds iff the target is a stored group key: the
-                # distinct value set within any output group over
-                # stored rows equals the set over raw rows
-                if (a.measure or "") not in self.attrs:
-                    return False
-                continue
-            if a.fn == "approx_distinct":
-                # folds iff a mergeable sketch partial is stored for
-                # the target (union is register-max, so re-aggregating
-                # sketches equals the single-pass sketch exactly)
-                if (a.measure or "") not in (self.sketches or {}):
-                    return False
-                continue
-            sm = self.measures.get(a.measure or "")
-            if sm is None:
-                return False
-            if a.fn in ("count", "avg") and sm.cnt_col is None:
-                return False
-            if a.fn == "min" and sm.min_col is None:
-                return False
-            if a.fn == "max" and sm.max_col is None:
-                return False
-        return True
+        return aggs_fold(q.aggs, self.measures, self.attrs, self.sketches)
 
     def build(self, spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame:
         # Filters BEFORE truncs: WHERE is pre-projection in SQL, so a
@@ -530,60 +633,12 @@ class Projection:
         for p in q.filters:
             df = df.filter(p.column())
         df = apply_truncs(df, q)
-        if not q.aggs:
-            # DISTINCT shape: the query's key combinations are a
-            # projection of the stored group keys (every raw row maps
-            # to exactly one stored group), so distinct-over-stored ≡
-            # distinct-over-raw — ~15k stored rows scanned instead of
-            # the fact table.
-            return df.select(*q.group_by).distinct().orderBy(*q.group_by)
-        exprs = []
-        for a in q.aggs:
-            # COUNT re-derives as a SUM of stored partial counts, whose
-            # value over ZERO input rows is NULL — but SQL COUNT of an
-            # empty input is 0. Grouped queries can't hit this (a group
-            # only exists where rows do); a filtered GLOBAL aggregate
-            # can, so coalesce to 0 exactly like the raw plan's
-            # F.count would return.
-            if a.fn == "count_star":
-                exprs.append(
-                    F.coalesce(F.sum(self.count_star_col), F.lit(0).cast("long"))
-                    .alias(a.alias)
-                )
-                continue
-            if a.fn == "count_distinct":
-                exprs.append(F.countDistinct(F.col(a.measure)).alias(a.alias))
-                continue
-            if a.fn == "approx_distinct":
-                exprs.append(
-                    F.hll_sketch_estimate(
-                        F.hll_union_agg(self.sketches[a.measure])  # type: ignore[index]
-                    ).alias(a.alias)
-                )
-                continue
-            m, sm = MEASURES[a.measure], self.measures[a.measure]  # type: ignore[index]
-            if a.fn == "sum":
-                exprs.append(isum_expr(F.col(sm.int_col), m.divisor).alias(a.alias))
-            elif a.fn == "count":
-                exprs.append(
-                    F.coalesce(F.sum(sm.cnt_col), F.lit(0).cast("long"))
-                    .alias(a.alias)
-                )
-            elif a.fn == "avg":
-                exprs.append(
-                    (isum_expr(F.col(sm.int_col), m.divisor) / F.sum(sm.cnt_col)).alias(
-                        a.alias
-                    )
-                )
-            elif a.fn == "min":
-                exprs.append(imin_expr(F.col(sm.min_col), m.divisor).alias(a.alias))
-            elif a.fn == "max":
-                exprs.append(imax_expr(F.col(sm.max_col), m.divisor).alias(a.alias))
-            else:
-                raise ValueError(f"unsupported aggregate fn {a.fn!r}")
-        out = df.groupBy(*q.group_by).agg(*exprs)
-        # Empty group_by = a global aggregate (one row; nothing to order).
-        return out.orderBy(*q.group_by) if q.group_by else out
+        # The DISTINCT shape (no aggs) reads the stored group keys:
+        # every raw row maps to exactly one stored group, so
+        # distinct-over-stored ≡ distinct-over-raw.
+        return aggregate(
+            df, q, MEASURES, self.measures, self.count_star_col, self.sketches
+        )
 
 
 def _open_pricing_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -794,89 +849,6 @@ def _dim_arm(
     return dims.select("o_orderkey", *attrs)
 
 
-def _final_agg_exprs(
-    q: AggQuery,
-    src_int: dict[str, str],
-    src_cnt: dict[str, str],
-    cnt_star: str | None,
-    src_min: dict[str, str] | None = None,
-    src_max: dict[str, str] | None = None,
-) -> list[Column]:
-    """The output aggregate expressions of ``q``, computed from int64
-    fixed-point inputs. ``src_int``/``src_cnt`` name the column each
-    measure's sum/count reads; ``cnt_star`` names a partial-count
-    column when the input rows are themselves partial aggregates (the
-    star path), else counts are row-level. ``src_min``/``src_max``:
-    where each measure's MIN/MAX input lives — the fused int column on
-    the row-level paths, the per-order partial-min/max column on the
-    partial-agg star path (MIN/MAX commute with the partial)."""
-    src_min = src_min if src_min is not None else src_int
-    src_max = src_max if src_max is not None else src_int
-    exprs = []
-    for a in q.aggs:
-        # COUNT(DISTINCT col) computes directly wherever the target
-        # column survives to the aggregation input — row-level paths
-        # trivially; the partial-agg star path keys its partials by
-        # the target too, so the distinct value set is preserved.
-        if a.fn == "count_distinct":
-            exprs.append(F.countDistinct(F.col(a.measure)).alias(a.alias))
-            continue
-        # approx_distinct computes ROW-LEVEL here (the plans that call
-        # this with approx aggregates are all row-level: _raw_plan
-        # forces the row-level form when one is present); the cube path
-        # union-merges stored sketches in Projection.build instead.
-        if a.fn == "approx_distinct":
-            exprs.append(
-                F.hll_sketch_estimate(
-                    F.hll_sketch_agg(F.col(a.measure))
-                ).alias(a.alias)
-            )
-            continue
-        # Partial-count re-aggregation (the cnt_star branch) must
-        # coalesce to 0 for empty-input GLOBAL aggregates — SQL
-        # COUNT is 0 there, but SUM of no partials is NULL (same
-        # edge as Projection.build; F.count already returns 0).
-        if a.fn == "count_star":
-            exprs.append(
-                (
-                    F.coalesce(F.sum(cnt_star), F.lit(0).cast("long"))
-                    if cnt_star
-                    else F.count(F.lit(1))
-                ).alias(a.alias)
-            )
-            continue
-        m = MEASURES[a.measure]  # type: ignore[index]
-        s = isum_expr(F.col(src_int[a.measure]), m.divisor)
-        if a.fn == "sum":
-            exprs.append(s.alias(a.alias))
-        elif a.fn == "min":
-            exprs.append(
-                imin_expr(F.col(src_min[a.measure]), m.divisor).alias(a.alias)
-            )
-        elif a.fn == "max":
-            exprs.append(
-                imax_expr(F.col(src_max[a.measure]), m.divisor).alias(a.alias)
-            )
-        elif a.fn == "count":
-            exprs.append(
-                (
-                    F.coalesce(F.sum(src_cnt[a.measure]), F.lit(0).cast("long"))
-                    if cnt_star
-                    else F.count(src_cnt[a.measure])
-                ).alias(a.alias)
-            )
-        elif a.fn == "avg":
-            c = (
-                F.sum(src_cnt[a.measure])
-                if cnt_star
-                else F.count(src_cnt[a.measure])
-            )
-            exprs.append((s / c).alias(a.alias))
-        else:
-            raise ValueError(f"unsupported aggregate fn {a.fn!r}")
-    return exprs
-
-
 def _raw_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame:
     chain = effective_chain(q)
     part, supp = q.part, q.supp
@@ -1064,12 +1036,9 @@ def _raw_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame:
 
     if not join_keys:
         # q01 shape: scan → fused projection → one-shuffle aggregate.
-        out = pre.groupBy(*q.group_by).agg(
-            *_final_agg_exprs(
-                q, int_cols, {m: c for m, c in cnt_cols.items() if c}, None
-            )
+        return aggregate(
+            pre, q, MEASURES, row_measures(int_cols, MEASURES), None, None
         )
-        return out.orderBy(*q.group_by) if q.group_by else out
 
     if join_keys != ["l_orderkey"] or arm_measures or approx_cols:
         # ROW-LEVEL arm join: when the partial key includes a
@@ -1083,12 +1052,9 @@ def _raw_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame:
         j = _attach_arms(pre)
         for m in arm_measures:
             j = j.withColumn(int_cols[m], MEASURES[m].raw_int())
-        out = j.groupBy(*q.group_by).agg(
-            *_final_agg_exprs(
-                q, int_cols, {m: c for m, c in cnt_cols.items() if c}, None
-            )
+        return aggregate(
+            j, q, MEASURES, row_measures(int_cols, MEASURES), None, None
         )
-        return out.orderBy(*q.group_by) if q.group_by else out
 
     # q26 shape, generalized: partial-aggregate the fact BELOW the
     # joins — keyed by the declared arms' join keys PLUS any
@@ -1109,18 +1075,13 @@ def _raw_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame:
         *dict.fromkeys(join_keys + local_group + cd_local)
     ).agg(*partial)
 
-    joined = _attach_arms(agg_l)
-    out = joined.groupBy(*q.group_by).agg(
-        *_final_agg_exprs(
-            q,
-            int_cols,
-            {m: f"__cnt_{m}" for m in cnt_cols},
-            "__cnt_star",
-            {m: f"__min_{m}" for m in min_ms},
-            {m: f"__max_{m}" for m in max_ms},
-        )
-    )
-    return out.orderBy(*q.group_by) if q.group_by else out
+    # MIN/MAX commute with the partial, so the final MIN/MAX read the
+    # per-key partial-min/max columns
+    stored = {
+        m: _StoredMeasure(c, f"__cnt_{m}", f"__min_{m}", f"__max_{m}")
+        for m, c in int_cols.items()
+    }
+    return aggregate(_attach_arms(agg_l), q, MEASURES, stored, "__cnt_star", None)
 
 
 # Stored fixed-point columns of the bucketed fact layout, one per
@@ -1251,12 +1212,9 @@ def _spine_plan(spark: SparkSession, sf_dir: str, q: AggQuery) -> DataFrame | No
     for p in star_filters:
         j = j.filter(p.column())
     j = apply_truncs(j, q, star_trunc_sources)
-    out = j.groupBy(*q.group_by).agg(
-        *_final_agg_exprs(
-            q, int_cols, {m: c for m, c in cnt_cols.items() if c}, None
-        )
+    return aggregate(
+        j, q, MEASURES, row_measures(int_cols, MEASURES), None, None
     )
-    return out.orderBy(*q.group_by) if q.group_by else out
 
 
 # ---------------------------------------------------------------------------

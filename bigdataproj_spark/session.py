@@ -65,12 +65,12 @@ def run_parallel(*thunks) -> list:
     - job descriptions are thread-local, so thunks may label their own
       jobs; the caller resets the main thread's label afterwards.
 
-    Returns the thunks' results in order.
+    Returns the thunks' results in order (``[]`` for no thunks).
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    if len(thunks) == 1:
-        return [thunks[0]()]
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
         # .exception() BLOCKS until the thunk finishes — all of them

@@ -52,6 +52,7 @@ from ..catalog import pid_scratch, scratch_tag, table
 from ..functions import cents, isum_expr
 from ..registry import query
 from ..session import run_parallel
+from .snapshots import next_version
 
 _N_BUCKETS = 32
 _WH_ROOT = os.path.join(tempfile.gettempdir(), "bigdataproj_bucketed_wh")
@@ -192,10 +193,7 @@ def append_bucketed_orders(
     # versions key on the BASE table name (od_name is already a
     # versioned name after a prior upsert)
     base_name = f"orders_bkt_{tag}_{_N_BUCKETS}"
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(base_name, 0) + 1
-    versions[base_name] = v
-    new_name = f"{base_name}_v{v}"
+    new_name = next_version(spark, base_name)
     write_bucketed(merged, new_name, os.path.join(wh, new_name), "o_orderkey")
     memo: dict = spark.__dict__["_bdp_bucketed_memo"]
     li_name, _ = memo[memo_key]
@@ -497,10 +495,7 @@ def refresh_order_revenue_rollup(
             + F.coalesce(F.col("d.n_items"), F.lit(0))
         ).alias("n_items"),
     )
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(roll_name, 0) + 1
-    versions[roll_name] = v
-    new_name = f"{roll_name}_v{v}"
+    new_name = next_version(spark, roll_name)
     write_bucketed(merged, new_name, os.path.join(wh, new_name), "l_orderkey")
     memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
     memo[("order_revenue", sf_dir)] = (new_name, den_name)
@@ -561,10 +556,7 @@ def refresh_orders_denorm(
         delta_orders.select("o_orderkey").distinct(), "o_orderkey", "left_anti"
     )
     merged = kept.unionByName(delta_denorm)
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(den_name, 0) + 1
-    versions[den_name] = v
-    new_name = f"{den_name}_v{v}"
+    new_name = next_version(spark, den_name)
     write_bucketed(merged, new_name, os.path.join(wh, new_name), "o_orderkey")
     memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
     memo[("order_revenue", sf_dir)] = (roll_name, new_name)
@@ -799,10 +791,7 @@ def refresh_segment_cube(
     merged = _merge_cube_frames(
         versioned_parquet(spark, stored_path), delta_cube, keys
     )
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(stored_path, 0) + 1
-    versions[stored_path] = v
-    new_path = f"{stored_path}_v{v}"
+    new_path = next_version(spark, stored_path)
     merged.write.mode("overwrite").parquet(new_path)
     memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
     memo[("segment_cube", sf_dir)] = new_path
@@ -893,10 +882,7 @@ def refresh_pricing_cube(
     merged = _merge_cube_frames(
         versioned_parquet(spark, stored_path), delta_cube, keys
     )
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(stored_path, 0) + 1
-    versions[stored_path] = v
-    new_path = f"{stored_path}_v{v}"
+    new_path = next_version(spark, stored_path)
     merged.write.mode("overwrite").parquet(new_path)
     memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
     memo[("pricing_cube", sf_dir)] = new_path
@@ -945,10 +931,7 @@ def refresh_star_date_cube(
         versioned_parquet(spark, stored_path), delta_cube, keys,
         _STAR_SKETCH_COLS,
     )
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(stored_path, 0) + 1
-    versions[stored_path] = v
-    new_path = f"{stored_path}_v{v}"
+    new_path = next_version(spark, stored_path)
     merged.write.mode("overwrite").parquet(new_path)
     memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
     memo[("star_date_cube", sf_dir)] = new_path

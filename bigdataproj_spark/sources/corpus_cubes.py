@@ -47,6 +47,7 @@ from ..catalog import table
 from ..functions import cents
 from ..operators.text import tokens
 from .bucketed import _layout_paths, merge_partial_frames  # noqa: F401 (re-exported)
+from .snapshots import next_version
 
 # ---------------------------------------------------------------------------
 # Stored-partial column contracts (one place per cube; deploy and
@@ -167,10 +168,7 @@ def refresh_sources_dim(
     if not fresh.take(1):
         return stored_path
     merged = stored.unionByName(fresh)
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(stored_path, 0) + 1
-    versions[stored_path] = v
-    new_path = f"{stored_path}_v{v}"
+    new_path = next_version(spark, stored_path)
     merged.write.mode("overwrite").parquet(new_path)
     memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
     memo[("sources_dim", sf_dir)] = new_path
@@ -267,10 +265,7 @@ def refresh_event_types_dim(
     if not fresh.take(1):
         return stored_path
     merged = stored.unionByName(fresh)
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(stored_path, 0) + 1
-    versions[stored_path] = v
-    new_path = f"{stored_path}_v{v}"
+    new_path = next_version(spark, stored_path)
     merged.write.mode("overwrite").parquet(new_path)
     memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
     memo[("event_types_dim", sf_dir)] = new_path
@@ -399,10 +394,7 @@ def _refresh_cube(
         versioned_parquet(spark, stored_path), delta_cube, keys,
         add_cols, min_cols, max_cols, sketch_cols,
     )
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(stored_path, 0) + 1
-    versions[stored_path] = v
-    new_path = f"{stored_path}_v{v}"
+    new_path = next_version(spark, stored_path)
     merged.write.mode("overwrite").parquet(new_path)
     memo: dict = spark.__dict__.setdefault("_bdp_projection_memo", {})
     memo[(memo_key, sf_dir)] = new_path

@@ -47,11 +47,12 @@ from ..plans.corpus_routing import (
     CORPUS_TABLES,
     CorpusProjection,
     CorpusTable,
-    _StoredM,
     current_corpus_table,
 )
 from .bucketed import _layout_paths
 from .corpus_cubes import merge_partial_frames
+from .snapshots import next_version
+from .user_projections import view_columns
 
 
 @dataclass
@@ -113,24 +114,15 @@ def corpus_user_projections(
 
 def _partial_aggs(t: CorpusTable, measures: tuple[str, ...]) -> list:
     aggs = []
-    for m in measures:
+    for m, s in view_columns(measures, t.measures)[0].items():
         cm = t.measures[m]
         v = cm.raw_int()
-        aggs.append(F.sum(v).alias(f"{m}_i"))
-        aggs.append(F.count(cm.source_col).alias(f"cnt_{m}"))
-        aggs.append(F.min(v).alias(f"min_{m}_i"))
-        aggs.append(F.max(v).alias(f"max_{m}_i"))
+        aggs.append(F.sum(v).alias(s.int_col))
+        aggs.append(F.count(cm.source_col).alias(s.cnt_col))
+        aggs.append(F.min(v).alias(s.min_col))
+        aggs.append(F.max(v).alias(s.max_col))
     aggs.append(F.count(F.lit(1)).alias("cnt"))
     return aggs
-
-
-def _merge_cols(measures: tuple[str, ...]):
-    add = tuple(f"{m}_i" for m in measures) + tuple(
-        f"cnt_{m}" for m in measures
-    ) + ("cnt",)
-    mins = tuple(f"min_{m}_i" for m in measures)
-    maxs = tuple(f"max_{m}_i" for m in measures)
-    return add, mins, maxs
 
 
 def _build_cube(
@@ -251,10 +243,7 @@ def deploy_corpus_projection(
         name=f"user:{name}",
         table=table_name,
         attrs=frozenset(keys),
-        measures={
-            m: _StoredM(f"{m}_i", f"cnt_{m}", f"min_{m}_i", f"max_{m}_i")
-            for m in measures
-        },
+        measures=view_columns(measures, t.measures)[0],
         count_star_col="cnt",
         open=_open,
         time_key=time_key,
@@ -305,15 +294,12 @@ def refresh_corpus_projection(
         spark, sf_dir, delta, t, u.keys, u.measures, u.time_key, u.dims
     )
     group_cols = list(u.keys) + ([u.time_key[0]] if u.time_key else [])
-    add, mins, maxs = _merge_cols(u.measures)
+    add, mins, maxs = view_columns(u.measures, t.measures)[1]
     merged = merge_partial_frames(
         spark.read.parquet(u.path), delta_cube, tuple(group_cols),
         add, mins, maxs,
     )
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(u.base_path, 0) + 1
-    versions[u.base_path] = v
-    new_path = f"{u.base_path}_v{v}"
+    new_path = next_version(spark, u.base_path)
     merged.write.mode("overwrite").parquet(new_path)
     u.path = new_path
     return new_path

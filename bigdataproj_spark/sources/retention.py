@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .bucketed import _layout_paths
+from .snapshots import next_version
 
 # base table -> tombstone key column
 TOMBSTONE_KEYS = {"documents": "doc_id", "orders": "o_orderkey"}
@@ -140,10 +141,7 @@ def _publish_tombstones(
     merged = fresh if stored is None else stored.unionByName(fresh)
     tag, wh = _layout_paths(sf_dir)
     base = os.path.join(wh, f"tombstones_{table_name}_{tag}")
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(base, 0) + 1
-    versions[base] = v
-    new_path = f"{base}_v{v}"
+    new_path = next_version(spark, base)
     merged.write.mode("overwrite").parquet(new_path)
     _memo(spark)[(sf_dir, table_name)] = new_path
 
@@ -167,10 +165,7 @@ def _publish_user_version(spark: SparkSession, u, merged: DataFrame) -> str:
     swing the catalog entry's path — the one publish discipline for
     both user catalogs (lineitem star + corpus), shared with their
     refresh paths' version keying."""
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(u.base_path, 0) + 1
-    versions[u.base_path] = v
-    new_path = f"{u.base_path}_v{v}"
+    new_path = next_version(spark, u.base_path)
     merged.write.mode("overwrite").parquet(new_path)
     u.path = new_path
     return new_path
@@ -179,10 +174,7 @@ def _publish_user_version(spark: SparkSession, u, merged: DataFrame) -> str:
 def _publish_cube(
     spark: SparkSession, memo_key: tuple, stored_path: str, merged: DataFrame
 ) -> str:
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(stored_path, 0) + 1
-    versions[stored_path] = v
-    new_path = f"{stored_path}_v{v}"
+    new_path = next_version(spark, stored_path)
     merged.write.mode("overwrite").parquet(new_path)
     spark.__dict__.setdefault("_bdp_projection_memo", {})[memo_key] = new_path
     return new_path

@@ -230,6 +230,17 @@ def versioned_parquet(spark: SparkSession, path: str) -> DataFrame:
     return hit
 
 
+def next_version(spark: SparkSession, base: str) -> str:
+    """The next version name of a refreshed layout: ``{base}_v{n}``,
+    with ``n`` counted per base in the session's version counter. The
+    counter is serving state, so WarehouseTxn rollback and RESTORE roll
+    it back with the paths it named."""
+    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
+    v = versions.get(base, 0) + 1
+    versions[base] = v
+    return f"{base}_v{v}"
+
+
 def evict_versioned_scan(spark: SparkSession, path: str) -> None:
     """Drop one :func:`versioned_parquet` memo entry. Needed exactly
     where a BASE path is legitimately overwritten in-session: a user

@@ -61,22 +61,16 @@ from ..plans.routing import (
     PART_ATTRS,
     SUPP_ATTRS,
     Projection,
+    _SPINE_INT_COLS,
     _StoredMeasure,
 )
 from ..catalog import table
 from .bucketed import _layout_paths, _lineitem_with_derived, bucketed_fact_tables
 from .corpus_cubes import merge_partial_frames
+from .snapshots import next_version
 
-# The bucketed fact's stored derived columns, per routable measure
-# (the same write-time contract _SPINE_INT_COLS documents).
-_DERIVED = {
-    "quantity": "l_qty_i",
-    "base_price": "l_price_i",
-    "discount": "l_disc_i",
-    "revenue": "l_rev_i",
-    "charge": "l_charge_i",
-}
-_ALL_MEASURES = tuple(_DERIVED)
+# the five lineitem measures, whose int columns the bucketed fact stores
+_ALL_MEASURES = tuple(_SPINE_INT_COLS)
 # Round-7 (v2): arm-home measures are declarable too. Each computes
 # post-join from its MEASURES entry (the same cents() arithmetic the
 # row-level plans run); declaring one pulls in the measure's home join
@@ -91,7 +85,7 @@ def _int_src(m: str) -> str:
     """The int64 column a measure's partials aggregate FROM in the
     cube build: the bucketed fact's at-rest derived column for
     lineitem measures, a post-join materialized expression otherwise."""
-    return _DERIVED.get(m, f"__{m}_raw_i")
+    return _SPINE_INT_COLS.get(m, f"__{m}_raw_i")
 
 
 @dataclass
@@ -122,26 +116,43 @@ def user_projections(spark: SparkSession, sf_dir: str) -> list[Projection]:
     return [u.projection for u in _catalog(spark, sf_dir).values()]
 
 
-def _partial_aggs(measures: tuple[str, ...]) -> list:
-    aggs = [F.sum(_int_src(m)).alias(f"{m}_i") for m in measures]
-    aggs += [
-        F.count(MEASURES[m].source_col).alias(f"cnt_{m}")
+def view_columns(measures: tuple[str, ...], model: dict):
+    """The partial columns a user view stores, for both families: per
+    measure ``{m}_i`` (int64 sum), ``cnt_{m}`` (non-null count, when
+    the measure has a source column in ``model``), ``min_{m}_i`` and
+    ``max_{m}_i``, plus the COUNT(*) column ``cnt``. Returns the
+    router-facing stored measures and the (additive, min, max) column
+    sets a refresh merges a delta cube with."""
+    stored = {
+        m: _StoredMeasure(
+            f"{m}_i",
+            f"cnt_{m}" if model[m].source_col else None,
+            f"min_{m}_i",
+            f"max_{m}_i",
+        )
         for m in measures
-        if MEASURES[m].source_col
+    }
+    sms = stored.values()
+    add = (
+        *(s.int_col for s in sms), *(s.cnt_col for s in sms if s.cnt_col), "cnt"
+    )
+    mins = tuple(s.min_col for s in sms)
+    maxs = tuple(s.max_col for s in sms)
+    return stored, (add, mins, maxs)
+
+
+def _partial_aggs(measures: tuple[str, ...]) -> list:
+    stored, _ = view_columns(measures, MEASURES)
+    aggs = [F.sum(_int_src(m)).alias(s.int_col) for m, s in stored.items()]
+    aggs += [
+        F.count(MEASURES[m].source_col).alias(s.cnt_col)
+        for m, s in stored.items()
+        if s.cnt_col
     ]
     aggs.append(F.count(F.lit(1)).alias("cnt"))
-    aggs += [F.min(_int_src(m)).alias(f"min_{m}_i") for m in measures]
-    aggs += [F.max(_int_src(m)).alias(f"max_{m}_i") for m in measures]
+    aggs += [F.min(_int_src(m)).alias(s.min_col) for m, s in stored.items()]
+    aggs += [F.max(_int_src(m)).alias(s.max_col) for m, s in stored.items()]
     return aggs
-
-
-def _merge_cols(measures: tuple[str, ...]):
-    add = tuple(f"{m}_i" for m in measures) + tuple(
-        f"cnt_{m}" for m in measures if MEASURES[m].source_col
-    ) + ("cnt",)
-    mins = tuple(f"min_{m}_i" for m in measures)
-    maxs = tuple(f"max_{m}_i" for m in measures)
-    return add, mins, maxs
 
 
 def _dim_side(
@@ -314,15 +325,7 @@ def deploy_projection(
     proj = Projection(
         name=f"user:{name}",
         attrs=frozenset(keys),
-        measures={
-            m: _StoredMeasure(
-                f"{m}_i",
-                f"cnt_{m}" if MEASURES[m].source_col else None,
-                f"min_{m}_i",
-                f"max_{m}_i",
-            )
-            for m in measures
-        },
+        measures=view_columns(measures, MEASURES)[0],
         count_star_col="cnt",
         open=_open,
         chain=chain,
@@ -399,14 +402,11 @@ def refresh_projection(
         spark, sf_dir, _lineitem_with_derived(delta_lineitem),
         u.keys, u.measures, u.chain, u.part, u.supp,
     )
-    add, mins, maxs = _merge_cols(u.measures)
+    add, mins, maxs = view_columns(u.measures, MEASURES)[1]
     merged = merge_partial_frames(
         spark.read.parquet(u.path), delta_cube, u.keys, add, mins, maxs
     )
-    versions: dict = spark.__dict__.setdefault("_bdp_projection_versions", {})
-    v = versions.get(u.base_path, 0) + 1
-    versions[u.base_path] = v
-    new_path = f"{u.base_path}_v{v}"
+    new_path = next_version(spark, u.base_path)
     merged.write.mode("overwrite").parquet(new_path)
     u.path = new_path
     return new_path

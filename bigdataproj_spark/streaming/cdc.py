@@ -475,11 +475,12 @@ class CdcProjectionConsumer:
 
     # -- catalog ----------------------------------------------------------
     def _register(self, path: str) -> None:
-        from ..plans.corpus_routing import CorpusProjection, _StoredM
+        from ..plans.corpus_routing import CORPUS_TABLES, CorpusProjection
         from ..sources.corpus_user_projections import (
             _catalog,
             _CorpusUserProjection,
         )
+        from ..sources.user_projections import view_columns
 
         cat = _catalog(self.spark, self.sf_dir)
         name = self.name
@@ -493,10 +494,9 @@ class CdcProjectionConsumer:
             name=f"user:{name}",
             table=self.table,
             attrs=frozenset(self.keys),
-            measures={
-                m: _StoredM(f"{m}_i", f"cnt_{m}", f"min_{m}_i", f"max_{m}_i")
-                for m in self.measures
-            },
+            measures=view_columns(
+                self.measures, CORPUS_TABLES[self.table].measures
+            )[0],
             count_star_col="cnt",
             open=_open,
         )
@@ -593,9 +593,9 @@ class CdcProjectionConsumer:
         return n
 
     def _apply(self, changes: DataFrame, head: int) -> None:
-        from ..plans.corpus_routing import current_corpus_table
+        from ..plans.corpus_routing import CORPUS_TABLES, current_corpus_table
         from ..sources.bucketed import merge_partial_frames
-        from ..sources.corpus_user_projections import _merge_cols
+        from ..sources.user_projections import view_columns
 
         keys = list(self.keys)
         stored = self._read_stored()
@@ -620,7 +620,9 @@ class CdcProjectionConsumer:
                 "left_anti",
             )
         delta = self._partials(adds)
-        add_cols, min_cols, max_cols = _merge_cols(self.measures)
+        add_cols, min_cols, max_cols = view_columns(
+            self.measures, CORPUS_TABLES[self.table].measures
+        )[1]
         merged = merge_partial_frames(
             stored, delta, self.keys, add_cols, min_cols, max_cols
         )
